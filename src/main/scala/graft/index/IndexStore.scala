@@ -214,7 +214,13 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
   /** (fileName, rows, bytes) per parquet part file — per-partition metrics.
     * Footer reads fan out on a thread pool: doing them serially on the
     * driver added seconds of all-cores-idle time per stage. */
-  private def parquetFileMetrics(dir: Path): Seq[(String, Long, Long)] = {
+  private def parquetFileMetrics(dir: Path): Seq[(String, Long, Long)] =
+    readFooters(dir)(_.getRecordCount).map { case (st, rows) => (st.getPath.getName, rows, st.getLen) }
+
+  /** Applies `f` to the footer reader of every parquet part file in `dir`,
+    * fanned out on a thread pool — driver-side, no Spark job. */
+  private def readFooters[A](dir: Path)(
+      f: org.apache.parquet.hadoop.ParquetFileReader => A): Seq[(org.apache.hadoop.fs.FileStatus, A)] = {
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
@@ -223,8 +229,7 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
       .map { st => Future {
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, hconf)
         val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        val rows = try reader.getRecordCount finally reader.close()
-        (st.getPath.getName, rows, st.getLen)
+        st -> (try f(reader) finally reader.close())
       }}
     Await.result(Future.sequence(futures), Duration.Inf)
   }
@@ -451,6 +456,30 @@ class IndexStore(val spark: SparkSession, val baseDir: String,
         .withColumn("seg", lit(s.id))
     }.reduceOption(_ unionByName _)
       .getOrElse(spark.emptyDataset[PostingShard].toDF().withColumn("seg", lit(0)))
+
+  /** (lowest, highest) posting shard over all segments, or None when the
+    * store holds no postings — read from the parquet footers' row-group
+    * statistics on the driver, so it costs no Spark job. Falls back to one
+    * min/max scan only if a row group lacks `shard` statistics. */
+  def postingsShardRange(): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    // per row group: (rows, Some((min, max)) of shard, or None without stats)
+    val groups = segments.flatMap(s => readFooters(p(s"seg-${s.id}", "postings")) { r =>
+      r.getFooter.getBlocks.asScala.toSeq.map { blk =>
+        val st = blk.getColumns.asScala.find(_.getPath.toDotString == "shard")
+          .map(_.getStatistics).filter(_.hasNonNullValue)
+        (blk.getRowCount, st.map(x => (x.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+          x.genericGetMax.asInstanceOf[java.lang.Long].longValue)))
+      }
+    }.flatMap(_._2)).filter(_._1 > 0)
+    if (groups.isEmpty) None
+    else if (groups.forall(_._2.isDefined))
+      Some((groups.map(_._2.get._1).min, groups.map(_._2.get._2).max))
+    else {
+      val r = postings().agg(min(col("shard")), max(col("shard"))).head()
+      if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
+    }
+  }
 
   /** Stored corpus rows across segments (with `seg`). */
   def corpus(): DataFrame =

@@ -2,18 +2,18 @@ package graft.search
 
 import graft.analysis.Analyzer
 import graft.core._
-import graft.index.{IndexStore, PostingCodec}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.index.IndexStore
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+/** Driver-side per-(field, term) query statistics. */
+final case class TermStat(field: String, term: String, df: Long,
+                          idf: Double, avgdl: Double)
 
 /** Query modes. The reference's multi-term search is disjunctive
   * accumulation (OR, indexing.go:385-493); AND is the intersection variant
   * the north rule's WAND path assumes; Wand is AND/OR-equivalent top-k with
   * block-max pruning. */
-/** Driver-side per-(field, term) query statistics. */
-final case class TermStat(field: String, term: String, df: Long,
-                          idf: Double, avgdl: Double)
-
 sealed trait SearchMode
 object SearchMode {
   case object Or extends SearchMode
@@ -23,18 +23,31 @@ object SearchMode {
 
 /** BM25 top-k search over an [[IndexStore]] (SURVEY.md §A.4 pinned scorer).
   *
-  * Plan shape (exhaustive path):
-  *   postings scan (parquet min/max pruned to the query terms / prefix range)
-  *   → blob decode (flatMap) → tombstone anti-filter → broadcast join with
-  *   the per-(field,term) idf + per-field avgdl stats (tiny, driver-built)
-  *   → per-row BM25 contribution (pure Column arithmetic, codegen'd)
-  *   → groupBy(doc_id) sum (partial agg map-side; cardinality ≤ matched docs)
-  *   → orderBy(score desc, doc_id).limit(k) ⇒ TakeOrderedAndProjectExec —
-  *   no global sort is ever materialized.
+  * Every query — OR, AND (any number of terms), WAND, prefix, fuzzy — is
+  * scored by ONE per-shard-group kernel, [[ShardQuery.scoreGroup]]: posting
+  * shards hold disjoint docId ranges (shard = doc_id / shardSpan), so each
+  * shard's matched rows score independently into a bounded heap, and the
+  * merged per-group top-ks are the global top-k. Where the kernel runs is
+  * the only routing decision:
   *
-  * The only shuffle is the final groupBy(doc_id) over matched postings —
-  * the same irreducible "accumulate per doc" the reference does in a hash
-  * map (indexing.go:380, 407-419), here distributed and spill-safe.
+  *  - driver path (Σdf·8 ≤ `driverWandMaxBytes` and the tombstones fit the
+  *    driver map): the pruned shard rows come from the driver LRU or one
+  *    collect, and shard groups are scored concurrently on the shared
+  *    [[DriverPool]]. A warm repeat query runs zero Spark jobs.
+  *  - distributed path: ONE shuffle-free Spark job. The store's shard range
+  *    (cached per version token) splits into G = min(defaultParallelism,
+  *    #shards) contiguous ranges; each range reads its rows through the
+  *    pushed `field IN` / `term IN` / shard-range scan filter (plus its doc
+  *    range's raw tombstone rows, tagged, when the store has deletes) and
+  *    is `coalesce(1)`-ed into one partition. The union of the ranges is
+  *    sorted by shard within partitions, the kernel runs in
+  *    `mapPartitions`, and `orderBy(score desc, doc_id asc).limit(k)`
+  *    becomes TakeOrderedAndProject, which merges the ≤ G·k hits inside the
+  *    same job. The plan has zero Exchanges and stays visible in
+  *    `explain()`.
+  *
+  * Both paths sum each doc's contributions in ascending (field, term)
+  * order, so every path is bit-identical to [[OracleScorer]].
   */
 class SearchEngine(val store: IndexStore) {
   import store.spark.implicits._
@@ -57,25 +70,20 @@ class SearchEngine(val store: IndexStore) {
     // an empty prefix would "match" cap arbitrary terms — reject loudly
     // (search() never passes one; tokenization drops empty terms)
     require(prefix.nonEmpty, "prefix must be non-empty")
-    cachedExpansion("p", prefix, fields, cap) {
-      val lo = prefix.toLowerCase
-      // Range pruning needs a successor string upper-bounding every
-      // lo-prefixed term in UTF-8 (code point) order. Incrementing the
-      // final UTF-16 unit is only order-preserving while it stays strictly
-      // below the surrogate range; prefixes ending at U+D7FF or above
-      // (incl. astral prefixes, whose last unit is a low surrogate, and
-      // U+FFFF-adjacent chars) fall back to an unpruned startswith scan —
-      // correct, just not min/max-pruned, and vanishingly rare.
-      val pred =
-        if (lo.nonEmpty && lo.last < 0xD7FF.toChar) {
-          val hi = lo.init + (lo.last + 1).toChar
-          $"term" >= lo && $"term" < hi
-        } else $"term".startsWith(lo)
-      cachedTermDf()
-        .filter($"field".isInCollection(fields) && pred)
-        .select($"field", $"term").orderBy($"term", $"field").limit(cap)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    }
+    val lo = prefix.toLowerCase
+    // Range pruning needs a successor string upper-bounding every
+    // lo-prefixed term in UTF-8 (code point) order. Incrementing the
+    // final UTF-16 unit is only order-preserving while it stays strictly
+    // below the surrogate range; prefixes ending at U+D7FF or above
+    // (incl. astral prefixes, whose last unit is a low surrogate, and
+    // U+FFFF-adjacent chars) fall back to an unpruned startswith scan —
+    // correct, just not min/max-pruned, and vanishingly rare.
+    val pred =
+      if (lo.nonEmpty && lo.last < 0xD7FF.toChar) {
+        val hi = lo.init + (lo.last + 1).toChar
+        $"term" >= lo && $"term" < hi
+      } else $"term".startsWith(lo)
+    cachedExpansion("p", prefix, fields, cap)(pred)
   }
 
   /** Fuzzy term expansion (reference FuzzySearch, indexing.go:689-709):
@@ -89,18 +97,10 @@ class SearchEngine(val store: IndexStore) {
   def expandFuzzy(key: String, fields: Seq[String], cap: Int = 100): Seq[(String, String)] = {
     val k = key.toLowerCase
     if (k.isEmpty) return Seq.empty
-    cachedExpansion("f", k, fields, cap) {
-      val lo = k.substring(0, 1)
-      val hi = (k.charAt(0) + 1).toChar.toString
-      val containsAll = k.distinct.map(c => $"term".contains(c.toString))
-        .reduce(_ && _)
-      cachedTermDf()
-        .filter($"field".isInCollection(fields) && $"term" >= lo && $"term" < hi)
-        .filter(containsAll)
-        .select($"field", $"term")
-        .orderBy($"term", $"field").limit(cap)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-    }
+    val lo = k.substring(0, 1)
+    val hi = (k.charAt(0) + 1).toChar.toString
+    val containsAll = k.distinct.map(c => $"term".contains(c.toString)).reduce(_ && _)
+    cachedExpansion("f", k, fields, cap)($"term" >= lo && $"term" < hi && containsAll)
   }
 
   /** Version-invalidated LRU for prefix/fuzzy expansions (≤ cap pairs per
@@ -112,16 +112,27 @@ class SearchEngine(val store: IndexStore) {
         size() > 4096
     }
 
+  /** The first `cap` dictionary pairs of `fields` matching `pred`, in
+    * (term, field) order. The one dictionary scan also reads each pair's
+    * df, which seeds the df cache under the version token the scan read,
+    * so scoring the expansion needs no second dictionary scan. */
   private def cachedExpansion(kind: String, key: String, fields: Seq[String], cap: Int)(
-      compute: => Seq[(String, String)]): Seq[(String, String)] = {
+      pred: Column): Seq[(String, String)] = {
     refreshIfStale()
     val ck = (kind, key, fields, cap)
-    val (tok, cached) = synchronized { (cacheToken, expandCache.get(ck)) }
+    val (tok, termDf, cached) = synchronized { (cacheToken, termDfC, expandCache.get(ck)) }
     if (cached != null) cached
     else {
-      val v = compute // dictionary scan outside the monitor
+      // dictionary scan outside the monitor
+      val rows = termDf.filter($"field".isInCollection(fields) && pred)
+        .select($"field", $"term", $"df").orderBy($"term", $"field").limit(cap)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toSeq
+      val v = rows.map(_._1)
       synchronized {
-        if (cacheToken == tok && expandCache.get(ck) == null) expandCache.put(ck, v)
+        if (cacheToken == tok) {
+          if (expandCache.get(ck) == null) expandCache.put(ck, v)
+          rows.foreach { case (pair, df) => dfCache.put(pair, java.lang.Long.valueOf(df)) }
+        }
       }
       v
     }
@@ -132,8 +143,8 @@ class SearchEngine(val store: IndexStore) {
   def searchFuzzy(query: String, fields: Seq[String] = CorpusDoc.Fields,
                   k: Int = 100): DataFrame = {
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
-    val matched = qTerms.flatMap(t => expandFuzzy(t, fields)).distinct
-    exhaustive(qTerms, matched, fields, k, SearchMode.Or)
+    val src = qTerms.flatMap(t => expandFuzzy(t, fields)).map { case (f, t) => (f, t, 0) }
+    topK(src, qTerms.size, k, SearchMode.Or)
   }
 
   /** Full search entry point mirroring the reference API
@@ -147,40 +158,17 @@ class SearchEngine(val store: IndexStore) {
              boosts: Map[String, Double] = Map.empty): DataFrame = {
     val qTerms = Analyzer.tokenize(query).distinct.sorted.toSeq
     if (qTerms.isEmpty) return spark.emptyDataset[Hit].toDF()
-    require(!(mode == SearchMode.And && beginsWith && qTerms.size > 64),
-      "AND + prefix supports at most 64 query terms")
     // a negative boost would flip idf's sign and invert WAND's upper bounds
     // into lower bounds, silently breaking pruning
     require(boosts.values.forall(_ >= 0.0), s"boosts must be >= 0: $boosts")
-    // .distinct: overlapping prefix expansions (e.g. "cl cla" both matching
-    // "class") must contribute one (field, term) pair, not two — a duplicate
-    // would double-count that term's BM25 contribution in the distributed
-    // join path. Each pair keeps the bit(s) of the QUERY term(s) it expands
-    // from, so AND semantics stay "every query term has ≥1 matched
-    // expansion" under prefix expansion.
-    val qIdx: Map[String, Int] = qTerms.zipWithIndex.toMap
-    val matchedSrc: Seq[(String, String, String)] =
-      if (beginsWith)
-        qTerms.flatMap(t => expandPrefix(t, fields).map { case (f, mt) => (f, mt, t) })
-      else fields.flatMap(f => qTerms.map(t => (f, t, t)))
-    val matched: Seq[(String, String)] =
-      matchedSrc.map { case (f, t, _) => (f, t) }.distinct
-    val srcBit: Map[(String, String), Long] =
-      matchedSrc.groupBy { case (f, t, _) => (f, t) }
-        .map { case (key, vs) =>
-          key -> vs.map(v => 1L << (qIdx(v._3) % 64)).reduce(_ | _) }
-    mode match {
-      // WAND needs a per-executor tombstone lookup; past the driver-map
-      // bound its pruning advantage is gone anyway (upper bounds ignore
-      // deletions), so fall back to the exhaustive OR plan — identical
-      // top-k semantics, anti-join tombstone filtering.
-      case SearchMode.Wand if tombstonesSmall =>
-        new WandExecutor(this).search(qTerms, matched, fields, k, boosts)
-      case SearchMode.Wand =>
-        exhaustive(qTerms, matched, fields, k, SearchMode.Or, boosts, srcBit)
-      case _ =>
-        exhaustive(qTerms, matched, fields, k, mode, boosts, srcBit)
+    // each matched pair keeps the index of the query term it expands from,
+    // so AND stays "every query term has ≥1 matched expansion" under prefix
+    // expansion
+    val src: Seq[(String, String, Int)] = qTerms.zipWithIndex.flatMap { case (t, i) =>
+      if (beginsWith) expandPrefix(t, fields).map { case (f, mt) => (f, mt, i) }
+      else fields.map(f => (f, t, i))
     }
+    topK(src, qTerms.size, k, mode, boosts)
   }
 
   /** Top-k hits hydrated with the stored documents (reference loads the ≤100
@@ -202,22 +190,33 @@ class SearchEngine(val store: IndexStore) {
 
   private var cacheToken: String = null
   private var fieldStatsC: Map[String, (Long, Long)] = Map.empty
-  private var tombstoneC: Map[Long, Int] = Map.empty
+  private var tombstoneC: Tombstones = Tombstones.empty
   private var tombSmallC: Boolean = true
   private var postingsC: DataFrame = _
   private var termDfC: DataFrame = _
+  /** (lowest, highest) posting shard; None = the store has no postings. */
+  private var shardRangeC: Option[(Long, Long)] = None
+  /** The distributed plan's tagged tombstone rows; None = no deletes. */
+  private var tombRowsC: Option[DataFrame] = None
 
   private def refreshIfStale(): Unit = synchronized {
     val t = store.versionToken()
     if (t != cacheToken) {
       fieldStatsC = store.fieldStats()
       // size-guard the driver tombstone map: past the configured bound the
-      // map is never collected — anti-joins run against the tombstone table
-      // instead (a bulk delete of 10^9 ids must not OOM the driver)
-      tombSmallC = store.tombstoneCount() <= store.cfg.maxDriverTombstones
-      tombstoneC = if (tombSmallC) store.tombstoneMap() else Map.empty
+      // map is never collected — such stores score on the distributed path,
+      // whose tasks read their own doc range's tombstone rows (a bulk
+      // delete of 10^9 ids must not OOM the driver)
+      val tombCount = store.tombstoneCount()
+      tombSmallC = tombCount <= store.cfg.maxDriverTombstones
+      tombstoneC = if (tombSmallC) Tombstones(store.tombstoneMap()) else Tombstones.empty
+      tombRowsC = if (tombCount == 0) None else Some(store.tombstonesDF().select(
+        lit(null).cast("string").as("field"), lit(null).cast("string").as("term"),
+        $"max_seg".as("seg"), expr(s"doc_id div ${store.cfg.shardSpan}").as("shard"),
+        lit(null).cast("binary").as("blocks"), lit(null).cast("binary").as("blob"), $"doc_id"))
       postingsC = store.postings()
       termDfC = store.termDf()
+      shardRangeC = store.postingsShardRange()
       blobCache.clear()
       blobCacheSize = 0L
       dfCache.clear()
@@ -233,7 +232,7 @@ class SearchEngine(val store: IndexStore) {
   // the fast paths ever reach here; a repeat query over cached terms runs
   // ZERO Spark jobs. Invalidated wholesale when the store version changes.
 
-  private type ShardRow = (String, String, Int, Long, Array[Byte], Array[Byte])
+  private type ShardRow = ShardQuery.ShardRow
   private val blobCache =
     new java.util.LinkedHashMap[(String, String), Array[ShardRow]](64, 0.75f, true)
   private var blobCacheSize = 0L
@@ -243,7 +242,7 @@ class SearchEngine(val store: IndexStore) {
   private def collectRows(pairs: Seq[(String, String)]): Array[ShardRow] =
     matchedShards(pairs)
       .select($"field", $"term", $"seg", $"shard", $"blocks", $"blob")
-      .as[ShardRow].collect()
+      .as(ShardQuery.shardRowEncoder).collect()
 
   /** Shard rows for the matched pairs, served from the LRU where possible.
     * Rows fetched by this call are returned even if eviction (or a version
@@ -260,7 +259,7 @@ class SearchEngine(val store: IndexStore) {
     * new version; a second concurrent bump is accepted (bounded retry —
     * CRUD is rare relative to queries, and the tombstone filter still
     * guards deletes either way). */
-  private[search] def fetchShardRows(matched0: Seq[(String, String)]): Array[ShardRow] = {
+  private def fetchShardRows(matched0: Seq[(String, String)]): Array[ShardRow] = {
     // dedupe: a duplicated pair would double-score its term
     val matched = matched0.distinct
     refreshIfStale()
@@ -306,26 +305,24 @@ class SearchEngine(val store: IndexStore) {
     attempt(1)
   }
 
-  private[search] def cachedPostings(): DataFrame = { refreshIfStale(); postingsC }
-  private[search] def cachedTermDf(): DataFrame = { refreshIfStale(); termDfC }
-  private[search] def cachedTombstones(): Map[Long, Int] = { refreshIfStale(); tombstoneC }
+  private def cachedTermDf(): DataFrame = { refreshIfStale(); termDfC }
+  private def cachedTombstones(): Tombstones = { refreshIfStale(); tombstoneC }
   /** Whether the tombstone set fits the driver-map bound; when false, every
-    * query path uses distributed anti-joins and WAND falls back to the
-    * exhaustive plan. */
+    * query scores on the distributed path, which reads tombstones as rows. */
   def tombstonesSmall: Boolean = { refreshIfStale(); tombSmallC }
 
   // ---------- scoring internals ----------
 
   /** idf + avgdl + df statistics for the matched (field, term) pairs,
-    * computed on the driver (≤ |fields|·|terms| rows) and broadcast.
+    * computed on the driver (≤ |fields|·|terms| rows).
     *
     * Per-field boosts scale idf here, at the single source of scoring
-    * statistics: every downstream path (Column arithmetic, driver
-    * accumulation, WAND global/block upper bounds and contributions) is
-    * linear in idf, so one multiplication boosts them all consistently —
+    * statistics: every downstream use (exhaustive accumulation, WAND
+    * global/block upper bounds and contributions) is linear in idf, so
+    * one multiplication boosts them all consistently —
     * WAND pruning stays safe because bounds scale with contributions. */
-  private[search] def termStats(matched0: Seq[(String, String)],
-                                boosts: Map[String, Double] = Map.empty): Seq[TermStat] = {
+  private def termStats(matched0: Seq[(String, String)],
+                        boosts: Map[String, Double] = Map.empty): Seq[TermStat] = {
     refreshIfStale()
     val matched = matched0.distinct // one stat row per pair, always
     val fstats = fieldStatsC
@@ -344,8 +341,9 @@ class SearchEngine(val store: IndexStore) {
 
   /** Per-(field, term) dfs with a version-invalidated LRU (8-byte values —
     * the bound is entry count). Misses fetch in one pruned scan; absent
-    * pairs are negative-cached as 0 so repeated misses cost nothing. A warm
-    * repeat query thus needs no Spark job for its statistics. */
+    * pairs are negative-cached as 0 so repeated misses cost nothing, and
+    * prefix/fuzzy expansions seed their pairs' dfs. A warm repeat query
+    * thus needs no Spark job for its statistics. */
   private val dfCache = new java.util.LinkedHashMap[(String, String), java.lang.Long](1024, 0.75f, true) {
     override def removeEldestEntry(
         e: java.util.Map.Entry[(String, String), java.lang.Long]): Boolean = size() > (1 << 17)
@@ -378,232 +376,103 @@ class SearchEngine(val store: IndexStore) {
     }
   }
 
-  private[search] def tombstoneFiltered(decoded: DataFrame): DataFrame = {
-    refreshIfStale()
-    if (tombSmallC) {
-      val ts = tombstoneC
-      if (ts.isEmpty) decoded
-      else {
-        val tsDF = broadcast(ts.toSeq.toDF("t_doc_id", "t_max_seg"))
-        decoded.join(tsDF,
-          decoded("doc_id") === tsDF("t_doc_id") && decoded("seg") <= tsDF("t_max_seg"),
-          "left_anti")
-      }
-    } else {
-      // past the driver bound: distributed anti-join against the aggregated
-      // tombstone table (shuffled, spill-safe — never materialized anywhere)
-      val tsDF = store.tombstoneAgg()
-      decoded.join(tsDF,
-        decoded("doc_id") === tsDF("t_doc_id") && decoded("seg") <= tsDF("t_max_seg"),
-        "left_anti")
-    }
-  }
-
   /** Selects only the shards of the matched terms — equality pushdown on the
     * (field, term)-sorted postings table. */
   def matchedShards(matched0: Seq[(String, String)]): DataFrame = {
     val matched = matched0.distinct // duplicates would fool the cross-product check
-    val all = cachedPostings()
-    if (all.isEmpty) return all
-    val fields = matched.map(_._1).distinct
-    val terms = matched.map(_._2).distinct
-    // two parquet-pushable IN filters bound the scan
-    val bounded = all.filter(
-      $"field".isInCollection(fields) && $"term".isInCollection(terms))
+    refreshIfStale()
+    val (all, range) = synchronized { (postingsC, shardRangeC) }
+    if (range.isEmpty) return all
+    val bounded = boundedShards(all, matched)
     // when the matched set IS the fields × terms cross product (every
     // non-prefix query), the IN filters are already exact — skip the
     // broadcast semi-join and its exchange/job. Prefix expansion, where
     // matched terms differ per field, still enforces the exact pair set.
-    if (matched.size.toLong == fields.size.toLong * terms.size) bounded
-    else {
-      val pairs = broadcast(matched.toDF("field", "term"))
-      bounded.join(pairs, Seq("field", "term"), "left_semi")
-    }
+    val crossSize = matched.map(_._1).distinct.size.toLong * matched.map(_._2).distinct.size
+    if (matched.size.toLong == crossSize) bounded
+    else bounded.join(broadcast(matched.toDF("field", "term")), Seq("field", "term"), "left_semi")
   }
 
-  private def exhaustive(qTerms: Seq[String], matched: Seq[(String, String)],
-                         fields: Seq[String], k: Int, mode: SearchMode,
-                         boosts: Map[String, Double] = Map.empty,
-                         srcBit: Map[(String, String), Long] = Map.empty): DataFrame = {
-    if (matched.isEmpty) return spark.emptyDataset[Hit].toDF()
+  /** Two parquet-pushable IN filters bound the scan to the matched pairs'
+    * fields × terms — a superset of the pairs, which the kernel narrows
+    * to the exact set (rows without a [[PairStat]] are skipped). */
+  private def boundedShards(all: DataFrame, matched: Seq[(String, String)]): DataFrame =
+    all.filter($"field".isInCollection(matched.map(_._1).distinct) &&
+      $"term".isInCollection(matched.map(_._2).distinct))
+
+  /** Scores the matched pairs (each with the index of the query term it
+    * expands from) and returns the top-k, on the driver or as one Spark job
+    * (see the class doc for the routing). */
+  private def topK(src: Seq[(String, String, Int)], terms: Int, k: Int, mode: SearchMode,
+                   boosts: Map[String, Double] = Map.empty): DataFrame = {
+    val matched = src.map(s => (s._1, s._2)).distinct
     val stats = termStats(matched, boosts)
     if (stats.isEmpty) return spark.emptyDataset[Hit].toDF()
-    // AND intersection mask: bit(s) of the query term(s) each matched pair
-    // expands from — identity when no expansion happened
-    val bitOf: Map[(String, String), Long] =
+    val masks: Map[(String, String), Array[Long]] =
       if (mode != SearchMode.And) Map.empty
-      else if (srcBit.nonEmpty) srcBit
-      else {
-        val qIdx = qTerms.zipWithIndex.toMap
-        matched.map(p => p -> (1L << (qIdx.getOrElse(p._2, 0) % 64))).toMap
+      else src.groupBy(s => (s._1, s._2)).map { case (pair, vs) =>
+        val m = new Array[Long]((terms + 63) >>> 6)
+        vs.foreach { case (_, _, i) => m(i >>> 6) |= 1L << (i & 63) }
+        pair -> m
       }
-    // small-query fast path (same bound as WAND): accumulate on the driver
-    // from one pruned scan instead of decode+shuffle+agg jobs. Requires the
-    // driver-side tombstone map, so it is skipped past the tombstone bound;
-    // AND tracking uses a 64-bit term mask, so wider AND queries distribute.
-    if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall
-        && (mode != SearchMode.And || qTerms.size <= 64))
-      return driverExhaustive(qTerms, matched, stats, k, mode, bitOf)
-    val statsDF = broadcast(
-      stats.map(s => (s.field, s.term, s.idf, s.avgdl,
-          bitOf.getOrElse((s.field, s.term), 0L)))
-        .toDF("field", "term", "idf", "avgdl", "tbit"))
-    // Attach the per-term stats to the SHARD rows (one row per (field,
-    // term, seg, shard) — vocabulary-sized) and explode AFTERWARDS, so the
-    // broadcast hash join hashes two string keys once per shard row, not
-    // once per decoded posting, and the per-posting stream carries three
-    // doubles + seg instead of two strings (guide §3.3: "explode before a
-    // join multiplies the shuffle; join first on the un-exploded key and
-    // explode after"). Contribution values are identical per posting; only
-    // the plan order changes.
-    val rows = tombstoneFiltered(
-      matchedShards(matched).join(statsDF, Seq("field", "term"))
-        .select($"seg", $"idf", $"avgdl", $"tbit",
-          graft.functions.GraftFunctions.posting_explode($"blob")))
-    val k1 = lit(bm25.k1); val b = lit(bm25.b)
-    val contrib = rows
-      .withColumn("part",
-        $"idf" * ($"tf" * (k1 + lit(1.0))) /
-          ($"tf" + k1 * (lit(1.0) - b + b * $"dl" / $"avgdl")))
-    // OR mode needs only the score sum. AND tracks the distinct-term set as
-    // a bit_or mask — one shuffle, unlike countDistinct, whose distinct
-    // rewrite inserts a second aggregate exchange on (doc_id, term).
-    val filtered = mode match {
-      case SearchMode.And if qTerms.size <= 64 =>
-        contrib.groupBy($"doc_id")
-          .agg(sum($"part").as("score"), bit_or($"tbit").as("mask"))
-          .filter(bit_count($"mask") === lit(qTerms.size))
-      case SearchMode.And =>
-        contrib.groupBy($"doc_id")
-          .agg(sum($"part").as("score"), countDistinct($"term").as("mterms"))
-          .filter($"mterms" === lit(qTerms.size.toLong))
-      case _ =>
-        contrib.groupBy($"doc_id").agg(sum($"part").as("score"))
-    }
-    filtered.select($"doc_id", $"score")
-      .orderBy(desc("score"), asc("doc_id")).limit(k)
+    val q = ShardQuery(stats.map(s =>
+      (s.field, s.term) -> PairStat(s.idf, s.avgdl, masks.getOrElse((s.field, s.term), null))).toMap,
+      mode, terms, bm25, k)
+    // ~8 bytes/posting is conservative for the varint triplets + block meta
+    if (stats.map(_.df).sum * 8 <= store.cfg.driverWandMaxBytes && tombstonesSmall)
+      driverTopK(matched, q)
+    else distributedTopK(matched, q)
   }
 
-  /** Driver-side exhaustive scoring for small candidate sets: collects the
-    * pruned shard rows, decodes and accumulates per-doc scores in ascending
-    * (field, term) order — the exact summation order of the oracle scorer,
-    * so scores are bit-identical to it (the distributed path sums in
-    * shuffle order and matches within fp tolerance).
-    *
-    * The inner loop is allocation-free: varints are decoded inline (no
-    * tuple materialization) into a primitive open-addressing accumulator
-    * ([[DriverScoreMap]]); AND-mode distinct-term tracking is a bitmask.
-    * The previous HashMap[Long, Double] + Set[String] version spent ~3x
-    * this path's runtime on boxing. */
-  private def driverExhaustive(qTerms: Seq[String], matched: Seq[(String, String)],
-                               stats: Seq[TermStat], k: Int, mode: SearchMode,
-                               bitOf: Map[(String, String), Long]): DataFrame = {
-    val statsMap = stats.map(s => (s.field, s.term) -> s).toMap
+  /** Driver path: shard groups of the collected (or LRU-cached) rows are
+    * scored concurrently on the shared pool, each into its own heap under a
+    * shared θ floor, then merged — per-group top-ks of disjoint docId
+    * ranges merge into the global top-k under (score desc, doc_id asc). */
+  private def driverTopK(matched: Seq[(String, String)], q: ShardQuery): DataFrame = {
     // rows BEFORE tombstones: if a concurrent delete lands between the two
-    // reads, the tombstone map is the newer of the pair and the deleted doc
-    // is still filtered (the reverse order could resurface it)
-    //
-    // SHARD-major sort: shard groups hold pairwise-disjoint docId ranges
-    // (shard = docId / span), so contiguous shard runs are independent
-    // scoring units executed CONCURRENTLY on the driver pool below —
-    // within a run the (f, t, seg) order is exactly the old global
-    // (f, t, shard, seg) order restricted to that shard's docs, so every
-    // doc's contributions still sum in ascending (field, term) order and
-    // scores stay bit-identical to the oracle scorer.
-    val rows = fetchShardRows(matched)
-      .sortBy { case (f, t, seg, shard, _, _) => (shard, f, t, seg) }
+    // reads, the tombstone lookup is the newer of the pair and the deleted
+    // doc is still filtered (the reverse order could resurface it)
+    val groups = fetchShardRows(matched).groupBy(_._4).values.toArray
     val tomb = cachedTombstones()
-    val and = mode == SearchMode.And
-    val est = math.min(stats.map(_.df).sum, 1L << 21).toInt
-    val k1 = bm25.k1; val b = bm25.b
-    val noTomb = tomb.isEmpty
-    val want = qTerms.size
-    // contiguous shard-run boundaries
-    val starts = scala.collection.mutable.ArrayBuffer(0)
-    var ri = 1
-    while (ri < rows.length) {
-      if (rows(ri)._4 != rows(ri - 1)._4) starts += ri
-      ri += 1
-    }
-    val nUnits = if (rows.isEmpty) 0 else starts.length
-    // One unit: accumulate its shard's postings into a private map, filter
-    // (AND mask), and return its local top-k. Per-unit map pre-sizing uses
-    // the unit's blob bytes (≥ 3 bytes per posting ⇒ bytes/3 bounds its
-    // distinct docs) instead of the global Σdf — the old single global
-    // accumulator pre-sized from Σdf to avoid ~7 re-hashes per hot query;
-    // the same reasoning applies per unit with the tighter local bound.
-    def scoreUnit(u: Int): BoundedHitHeap = {
-      val from = starts(u)
-      val until = if (u + 1 < nUnits) starts(u + 1) else rows.length
-      var bytes = 0L
-      var i = from
-      while (i < until) { bytes += rows(i)._6.length; i += 1 }
-      val estU = math.min(est.toLong, bytes / 3 + 16).toInt
-      val acc = new DriverScoreMap(math.max(estU * 10 / 7, 1 << 10))
-      i = from
-      while (i < until) {
-        val (f, t, seg, _, _, blob) = rows(i)
-        statsMap.get((f, t)).foreach { st =>
-          val idf = st.idf
-          val avgdl = st.avgdl
-          val bit = if (and) bitOf.getOrElse((f, t), 0L) else 0L
-          var p = 0
-          var prevDoc = 0L
-          while (p < blob.length) {
-            // inline LEB128 × 3: docId delta, tf, dl
-            var v = 0L; var shift = 0; var by = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val d = prevDoc + v
-            prevDoc = d
-            v = 0L; shift = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val tf = v.toDouble
-            v = 0L; shift = 0
-            do { by = blob(p) & 0xff; v |= (by & 0x7fL) << shift; shift += 7; p += 1 }
-            while ((by & 0x80) != 0)
-            val dl = v.toDouble
-            if (noTomb || !tomb.get(d).exists(seg <= _)) {
-              // EXACT expression shape of OracleScorer / the Column plan —
-              // re-associating it would break bit-identity with both
-              val part = idf * (tf * (k1 + 1.0)) /
-                (tf + k1 * (1.0 - b + b * dl / avgdl))
-              acc.add(d, part, bit)
-            }
-          }
-        }
-        i += 1
-      }
-      val h = new BoundedHitHeap(k)
-      acc.foreach { (d, s, m) =>
-        if (!and || java.lang.Long.bitCount(m) == want) h.offer(d, s)
-      }
+    val shared = new SharedTheta
+    val heap = new BoundedHitHeap(q.k)
+    DriverPool.run(groups.length, math.max(1, spark.sparkContext.defaultParallelism)) { u =>
+      val h = new BoundedHitHeap(q.k, shared)
+      q.scoreGroup(groups(u), tomb, h)
       h
-    }
-    // Disjoint doc ranges ⇒ merged per-unit top-ks equal the global top-k
-    // under the (score desc, docId asc) total order. Pool size = the
-    // session's defaultParallelism (never a hard-coded core count); the
-    // single-unit / single-core case runs inline with zero pool overhead —
-    // the previous sequential behavior exactly.
-    val par = math.max(1, spark.sparkContext.defaultParallelism)
-    val heap = new BoundedHitHeap(k)
-    if (nUnits <= 1 || par <= 1) {
-      var u = 0
-      while (u < nUnits) {
-        scoreUnit(u).result().foreach { case (d, s) => heap.offer(d, s) }
-        u += 1
-      }
-    } else {
-      val pool = DriverPool(par)
-      val futs = (0 until nUnits).map { u =>
-        pool.submit(new java.util.concurrent.Callable[BoundedHitHeap] {
-          def call(): BoundedHitHeap = scoreUnit(u)
-        })
-      }
-      futs.foreach(_.get().result().foreach { case (d, s) => heap.offer(d, s) })
-    }
+    }.foreach(_.result().foreach { case (d, s) => heap.offer(d, s) })
     // already (score desc, doc_id asc)-sorted and ≤ k: plain LocalRelation
-    heap.result().toDF("doc_id", "score")
+    spark.createDataset(heap.result())(ShardQuery.hitEncoder).toDF("doc_id", "score")
+  }
+
+  /** A one-row union child whose partitioning differs from the ranges'.
+    * Spark 4 plans a Union of children that all report SinglePartition as a
+    * partition-ZIPPING union — every range in ONE task. With this child the
+    * union concatenates, one task per range. Its tombstone-tagged row sits
+    * in shard Long.MinValue, a group with no postings, so no score changes. */
+  private lazy val unionGuard: DataFrame =
+    spark.createDataset(Seq[ShardQuery.TaggedRow]((null, null, 0, Long.MinValue, null, null, -1L)))(
+      ShardQuery.taggedEncoder).toDF("field", "term", "seg", "shard", "blocks", "blob", "doc_id")
+
+  /** Distributed path: ONE shuffle-free Spark job (see the class doc). */
+  private def distributedTopK(matched: Seq[(String, String)], q: ShardQuery): DataFrame = {
+    refreshIfStale()
+    val (all, range, tombRows) = synchronized { (postingsC, shardRangeC, tombRowsC) }
+    val (lo, hi) = range.getOrElse(return spark.emptyDataset[Hit].toDF())
+    val n = hi - lo + 1
+    val g = math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong, n))
+    val span = store.cfg.shardSpan
+    val rows = boundedShards(all, matched)
+      .select($"field", $"term", $"seg", $"shard", $"blocks", $"blob", lit(-1L).as("doc_id"))
+    val ranges = (0L until g).map { i =>
+      val (a, b) = (lo + n * i / g, lo + n * (i + 1) / g)
+      val part = rows.filter($"shard" >= a && $"shard" < b)
+      tombRows.fold(part)(t => part.union(t.filter($"doc_id" >= a * span && $"doc_id" < b * span)))
+        .coalesce(1)
+    }
+    val union = if (ranges.size == 1) ranges.head else (ranges :+ unionGuard).reduce(_ union _)
+    union.sortWithinPartitions("shard")
+      .as(ShardQuery.taggedEncoder).mapPartitions(q.scorePartition)(ShardQuery.hitEncoder)
+      .toDF("doc_id", "score").orderBy(desc("score"), asc("doc_id")).limit(q.k)
   }
 }

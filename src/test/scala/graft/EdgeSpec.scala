@@ -436,6 +436,51 @@ class EdgeSpec extends AnyFunSuite {
     assert(!third.map(_._1).contains(first.head._1), "cache must invalidate on delete")
   }
 
+  test("Spark jobs per query: 1 per distributed collect, <= 2 per fresh driver prefix, 0 warm") {
+    val docs = CorpusGen.generate(spark, 200, seed = 17).collect().toSeq
+    def engine(cfg: IndexConfig, tag: String): SearchEngine = {
+      val st = new IndexStore(spark, TestSpark.tempDir(tag), cfg)
+      st.createSegment(spark.createDataset(docs))
+      new SearchEngine(st)
+    }
+    val sc = spark.sparkContext
+    def jobs(group: String)(f: => Any): Int = {
+      sc.setJobGroup(group, group)
+      try f finally sc.clearJobGroup()
+      Thread.sleep(500) // listener bus drain
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val dist = engine(IndexConfig(shardSpan = 32, fields = Seq("content"), driverWandMaxBytes = 0),
+      "jobs-dist")
+    Seq(SearchMode.Or, SearchMode.And, SearchMode.Wand).foreach { mode =>
+      def run() = dist.search("import class the", Seq("content"), k = 10, mode = mode).collect()
+      run() // fills the df cache
+      val n = jobs(s"dist-$mode")(run())
+      assert(n == 1, s"distributed $mode collect with cached dfs must run exactly 1 job, ran $n")
+    }
+    val drv = engine(IndexConfig(shardSpan = 32, fields = Seq("content")), "jobs-driver")
+    drv.search("import", Seq("content"), k = 10).collect() // store-version caches
+    def prefix() = drv.search("cla", Seq("content"), beginsWith = true, k = 10).collect()
+    val fresh = jobs("prefix-fresh")(prefix())
+    assert(fresh >= 1 && fresh <= 2, s"fresh driver prefix query must run <= 2 jobs, ran $fresh")
+    val warm = jobs("prefix-warm")(prefix())
+    assert(warm == 0, s"warm repeat must run no jobs, ran $warm")
+  }
+
+  test("a failing driver-pool unit surfaces its original exception and stops its siblings") {
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val e = intercept[IllegalStateException] {
+      graft.search.DriverPool.run(1000, 4) { u =>
+        started.incrementAndGet()
+        if (u == 2) throw new IllegalStateException("unit 2 failed")
+        Thread.sleep(2)
+        u
+      }
+    }
+    assert(e.getMessage == "unit 2 failed")
+    assert(started.get < 100, s"siblings kept starting units after the failure: ${started.get}")
+  }
+
   test("commit-field exact lookup (40-hex unique terms)") {
     val docs = CorpusGen.generate(spark, 50, seed = 12).collect().toSeq
     val store = new IndexStore(spark, TestSpark.tempDir("commit"), IndexConfig(shardSpan = 64))

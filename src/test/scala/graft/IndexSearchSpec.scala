@@ -95,7 +95,39 @@ class IndexSearchSpec extends AnyFunSuite {
         val got = distEngine.search(q, Seq("content"), k = 10, mode = mode)
           .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
         assert(got.map(_.doc_id) == oracle.map(_.doc_id), s"dist rank for [$q] $mode")
-        got.zip(oracle).foreach { case (g, o) => assert(math.abs(g.score - o.score) <= 1e-5) }
+        // one kernel sums in the oracle's (field, term) order: bit-identical
+        got.zip(oracle).foreach { case (g, o) =>
+          assert(g.score == o.score, s"dist score for [$q] $mode doc=${g.doc_id}: ${g.score} vs ${o.score}")
+        }
+      }
+    }
+  }
+
+  test("AND over more than 64 terms (exact and prefix) equals the oracle bit for bit on both paths") {
+    // 70 distinct query terms; every third doc holds all of them, the rest
+    // miss one. Each prefix "wideNN" expands to exactly one term, so the
+    // oracle's AND (distinct expanded terms) and the engine's (every query
+    // term has a matched expansion) coincide.
+    val words = (0 until 70).map(i => f"wide$i%02dq")
+    val docs = (0 until 48).map { d =>
+      val kept = if (d % 3 == 0) words else words.filterNot(_ == words(d % 70))
+      val extra = Seq.fill(d % 4 + 1)(words(d % 70)) ++ Seq.fill(d % 5)(s"filler$d")
+      CorpusDoc(d.toLong, "r", s"p$d", f"$d%040x", "en", (kept ++ extra).mkString(" "))
+    }
+    val wideCfg = IndexConfig(shardSpan = 8, fields = Seq("content"))
+    Seq(wideCfg, wideCfg.copy(driverWandMaxBytes = 0)).foreach { c =>
+      val st = new IndexStore(spark, TestSpark.tempDir("wideand"), c)
+      st.createSegment(spark.createDataset(docs))
+      val eng = new SearchEngine(st)
+      Seq((words.mkString(" "), false), (words.map(_.dropRight(1)).mkString(" "), true)).foreach {
+        case (q, bw) =>
+          val oracle = OracleScorer.search(docs, q, Seq("content"), bw, k = 10,
+            andSemantics = true, params = c.bm25)
+          val got = eng.search(q, Seq("content"), bw, k = 10, mode = SearchMode.And)
+            .collect().map(r => Hit(r.getLong(0), r.getDouble(1))).toSeq
+          assert(oracle.size == 10, s"fixture must fill the top-10: $oracle")
+          assert(got == oracle,
+            s"wide AND (prefix=$bw, driverWandMaxBytes=${c.driverWandMaxBytes})\n got=$got\n exp=$oracle")
       }
     }
   }

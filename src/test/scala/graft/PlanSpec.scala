@@ -7,9 +7,9 @@ import graft.search.{SearchEngine, SearchMode}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan audits: the scale story only holds if the plans are what we
-  * think they are. Checks parquet filter pushdown on the term dictionary,
-  * broadcast of the tiny stats relation, and top-k via
-  * TakeOrderedAndProject (no global sort). */
+  * think they are. Checks parquet filter pushdown on the term dictionary and
+  * the postings, and that a distributed top-k is one shuffle-free job
+  * merged by TakeOrderedAndProject (no global sort). */
 class PlanSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
@@ -45,24 +45,35 @@ class PlanSpec extends AnyFunSuite {
       "range predicate must be pushed:\n" + plan.take(3000))
   }
 
-  test("scoring uses a broadcast join for term stats and TakeOrderedAndProject for top-k") {
-    val df = engine.search("import class", Seq("content"), k = 10)
-    val plan = physicalPlan(df)
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      "stats join must broadcast:\n" + plan.take(3000))
-    assert(plan.contains("TakeOrderedAndProject"),
-      "top-k must not materialize a global sort:\n" + plan.take(3000))
-    assert(!plan.contains("SortExec") || !plan.contains("GlobalLimit"),
-      "no global sort expected")
+  test("distributed top-k is ONE shuffle-free plan merged by TakeOrderedAndProject") {
+    Seq(("import class", SearchMode.Or, false), ("import class", SearchMode.And, false),
+        ("import the", SearchMode.Wand, false), ("im cl", SearchMode.Or, true)).foreach {
+      case (q, mode, bw) =>
+        val plan = physicalPlan(engine.search(q, Seq("content"), bw, k = 10, mode))
+        assert(!plan.contains("Exchange"), s"$mode plan must not shuffle or broadcast:\n" + plan.take(3000))
+        assert(!plan.contains("Join"), s"$mode plan must not join:\n" + plan.take(3000))
+        assert(plan.contains("TakeOrderedAndProject"),
+          s"$mode top-k must merge in TakeOrderedAndProject:\n" + plan.take(3000))
+        assert(!plan.contains("GlobalLimit"), "no global sort expected")
+    }
   }
 
-  test("distributed WAND exchanges on shard and sorts within partitions (streaming group-walk)") {
-    val df = engine.search("import the", Seq("content"), k = 10, mode = SearchMode.Wand)
-    val plan = physicalPlan(df)
-    assert(plan.contains("hashpartitioning(shard"),
-      "WAND stage must exchange on shard:\n" + plan.take(3000))
-    assert(plan.matches("(?s).*Sort \\[shard#\\d+L? ASC NULLS FIRST\\], false.*"),
-      "WAND stage must sort WITHIN partitions on shard (streamed group-walk):\n" + plan.take(3000))
+  test("every shard range's postings scan pushes In(term) and its shard bounds") {
+    val df = engine.search("import class the", Seq("content"), k = 10)
+    // the full pushed-filter lists (the plan string abbreviates them)
+    val pushed = df.queryExecution.executedPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.endsWith("/postings")) =>
+        s.metadata("PushedFilters")
+    }
+    val (lo, hi) = engine.store.postingsShardRange().get
+    val g = math.min(spark.sparkContext.defaultParallelism.toLong, hi - lo + 1)
+    assert(g > 1 && pushed.size == g,
+      s"expected one postings scan per shard range ($g):\n" + physicalPlan(df).take(4000))
+    pushed.foreach { f =>
+      assert(f.contains("In(term") && f.contains("GreaterThanOrEqual(shard,") &&
+        f.contains("LessThan(shard,"), "scan must push the term set and its shard range: " + f)
+    }
   }
 
   test("OR-mode exhaustive aggregation carries no per-doc set aggregate") {
@@ -72,22 +83,15 @@ class PlanSpec extends AnyFunSuite {
       "OR mode must not aggregate a term set per doc:\n" + plan.take(3000))
   }
 
-  test("AND-mode aggregation is a single shuffle (bit_or mask, no distinct rewrite)") {
-    val df = engine.search("import class", Seq("content"), k = 10, mode = SearchMode.And)
-    val plan = physicalPlan(df)
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1,
-      s"AND plan must shuffle exactly once (got $exchanges):\n" + plan.take(3000))
-    assert(!plan.contains("count(distinct"), "AND must not use a distinct aggregate")
-  }
-
-  test("whole-stage codegen covers the BM25 scoring expression (final AQE plan)") {
-    val df = engine.search("import the", Seq("content"), k = 10)
-    df.collect() // AQE finalizes the plan on execution
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("isFinalPlan=true"), plan.take(500))
-    // in the final-plan rendering codegen stages print as "*(n) Operator"
-    assert(plan.contains("WholeStageCodegen") || plan.contains("*("), plan.take(3000))
+  test("AND over more than 64 terms plans the same shuffle-free job (no distinct aggregate)") {
+    val words = engine.store.termDf().select("term").distinct().orderBy("term")
+      .collect().map(_.getString(0)).take(70)
+    assert(words.length == 70)
+    val plan = physicalPlan(engine.search(words.mkString(" "), Seq("content"), k = 10,
+      mode = SearchMode.And))
+    assert(!plan.contains("Exchange") && !plan.contains("count(distinct"),
+      "wide AND must stay one shuffle-free job:\n" + plan.take(3000))
+    assert(plan.contains("TakeOrderedAndProject"), plan.take(3000))
   }
 
   test("fused curate is ONE parquet scan, zero shuffles, inside codegen") {
